@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -276,8 +277,69 @@ def latest_snapshot(root: str, io: LocalFileIO | None = None) -> Snapshot | None
 def bucket_expr(key_col: str, num_buckets: int):
     """Deterministic bucket id for a key — xxhash64 like Iceberg's
     bucket transform. Used identically at write and merge time so changed
-    keys route to the same bucket."""
+    keys route to the same bucket. ``string_bucket`` is its driver-side
+    twin for string keys; the two must agree."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int — what Spark's
+    ``xxhash64`` returns for one string column (its bytes, seed 42)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v1, v2 = (seed + _P1 + _P2) & _M64, (seed + _P2) & _M64
+        v3, v4 = seed & _M64, (seed - _P1) & _M64
+        while i + 32 <= n:
+            a, b, c, d = struct.unpack_from("<4Q", data, i)
+            v1, v2, v3, v4 = _round(v1, a), _round(v2, b), _round(v3, c), _round(v4, d)
+            i += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _round(0, v)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= (struct.unpack_from("<I", data, i)[0] * _P1) & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h ^= (data[i] * _P5) & _M64
+        h = (_rotl(h, 11) * _P1) & _M64
+        i += 1
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def string_bucket(key: str, num_buckets: int) -> int:
+    """The bucket ``bucket_expr`` assigns to the string ``key``, computed
+    on the driver without a Spark job. The two must agree: point reads
+    prune files by this value, so a mismatch silently drops rows. Only
+    valid for a plain ``StringType`` key column (Spark hashes its UTF-8
+    bytes); other types hash their physical representation."""
+    return xxhash64(key.encode("utf-8")) % num_buckets
 
 
 def collect_stats(df: DataFrame, stat_cols: list[str]) -> DataFrame:

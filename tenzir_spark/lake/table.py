@@ -4,6 +4,7 @@ and an exactly-once epoch ledger. See format.py for the on-disk layout.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -22,6 +23,7 @@ from tenzir_spark.lake.format import (
     Snapshot,
     bucket_expr,
     latest_snapshot,
+    string_bucket,
     write_snapshot_atomic,
 )
 
@@ -167,19 +169,32 @@ class LakeTable:
         ``buckets`` restricts to the given bucket ids (metadata-only file
         pruning, zero I/O for the rest — the catalog-synopsis behavior of
         export.cpp:56-107). ``key_range=(lo,hi)`` additionally prunes by
-        per-file key min/max stats.
+        per-file key min/max stats. A point lookup (``lo == hi``) on a
+        plain string key also keeps only the key's bucket, since the
+        bucket is an exact synopsis of the key; range lookups and other
+        key types prune by min/max only, because hash buckets scatter a
+        range and a non-string key hashes by its physical written type.
+
+        Construction submits no schema-inference job: each schema epoch's
+        files are read with the Spark schema recorded in the first file's
+        footer. (Spark still lists more than 32 paths of one epoch with a
+        parallel-listing job.)
 
         In MoR mode, base + delta files are combined and resolved to one
         row per key (max __lsn wins, deletes drop) unless ``resolve=False``
         (internal/compaction use — returns raw rows incl. __lsn/__op).
         """
-        files = self.snapshot.files
-        if buckets is not None:
-            bset = set(buckets)
+        files, kc, cur = self.snapshot.files, self.snapshot.key_col, self.snapshot.schema
+        bset = None if buckets is None else set(buckets)
+        if (key_range is not None and key_range[0] == key_range[1]
+                and isinstance(key_range[0], str) and kc in cur.fieldNames()
+                and cur[kc].dataType == T.StringType()):
+            point = string_bucket(key_range[0], self.snapshot.num_buckets)
+            bset = {point} if bset is None else bset & {point}
+        if bset is not None:
             files = [f for f in files if f.bucket in bset]
         if key_range is not None:
             lo, hi = key_range
-            kc = self.snapshot.key_col
             kept = []
             for f in files:
                 st = f.stats.get(kc)
@@ -188,7 +203,6 @@ class LakeTable:
                 elif not (hi < st["min"] or lo > st["max"]):
                     kept.append(f)
             files = kept
-        cur = self.snapshot.schema
         if not files:
             # typed empty relation without the slow createDataFrame path
             cols = [F.lit(None).cast(f.dataType).alias(f.name) for f in cur.fields]
@@ -200,7 +214,9 @@ class LakeTable:
             by_epoch.setdefault(f.schema_epoch, []).append(self.io.join(self.root, f.path))
         parts = []
         for epoch, paths in sorted(by_epoch.items()):
-            parts.append(self._align(self.spark.read.parquet(*paths), epoch))
+            schema = _footer_schema(paths[0], self.io)
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            parts.append(self._align(reader.parquet(*paths), epoch))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -295,7 +311,7 @@ class LakeTable:
             key_col=snap.key_col, ledger=snap.ledger,
             properties=snap.properties,
         )
-        write_snapshot_atomic(self.root, new_snap)
+        write_snapshot_atomic(self.root, new_snap, self.io)
         self.snapshot = new_snap
 
     # ------------------------------------------------------------------ write
@@ -1029,6 +1045,23 @@ def _footer_stats(path: str, stat_cols: list[str],
         if mn is not None:
             stats[c] = {"min": _plain(mn), "max": _plain(mx), "nulls": nulls}
     return rows, stats
+
+
+def _footer_schema(path: str, io: LocalFileIO) -> T.StructType | None:
+    """The Spark schema a Spark-written parquet file records in its footer
+    (``org.apache.spark.sql.parquet.row.metadata``) — the entry Spark's
+    own schema inference reads, without the inference job. None when the
+    entry is absent or the footer unreadable: the caller then falls back
+    to inference, which also reports a missing file the usual way."""
+    if pq is None:
+        return None
+    try:
+        with io.open_read(path) as fh:
+            kv = pq.ParquetFile(fh).metadata.metadata or {}
+        raw = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
+        return None if raw is None else T.StructType.fromJson(json.loads(raw))
+    except (OSError, ValueError):
+        return None
 
 
 def _plain(v):

@@ -39,6 +39,25 @@ def package_pyfiles(out_dir: str | None = None) -> str:
     return zip_path
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host: ``SPARK_DRIVER_MEM`` if set,
+    else half of MemTotal, clamped to [1g, 32g]. In local mode the driver
+    heap is the whole executor heap; the other half stays for the Python
+    workers, the page cache and a tmpfs lake or shuffle dir, which share
+    the same RAM; a heap larger than RAM gets the JVM OOM-killed. Without
+    a readable meminfo (non-Linux) the default is 4g."""
+    override = os.environ.get("SPARK_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(int(line.split()[1]) for line in fh
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{min(32 * 1024, max(1024, total_kb // 1024 // 2))}m"
+
+
 def get_spark(
     app_name: str = "tenzir_spark",
     master: str | None = None,
@@ -82,7 +101,7 @@ def get_spark(
         # floor is moot) — Spark's own knob for small-file parallelism
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         # bounded driver collects (e.g. the ngram broadcast-index build
         # gates on ~1 GB of estimated postings) can exceed the 1g default
         .config("spark.driver.maxResultSize", "4g")

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tenzir_spark.lake import LakeTable
-from tenzir_spark.lake.format import latest_snapshot
+from tenzir_spark.lake.format import latest_snapshot, string_bucket
 
 SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -93,9 +93,34 @@ def test_stats_pruning(table, spark):
     _merge(table, spark, [(f"u{i:03d}", "insert", i, i) for i in range(100)], 0)
     pruned = table.read(key_range=("u000", "u000"))
     full = table.read()
-    assert {r.url for r in pruned.collect()} >= {"u000"}
-    # pruning reads fewer files than the full scan unless all keys collide
-    assert len(pruned.inputFiles()) <= len(full.inputFiles())
+    assert {r.url for r in pruned.filter(F.col("url") == "u000").collect()} == {"u000"}
+    # a point read scans exactly the key's bucket; the full scan all four
+    b = string_bucket("u000", table.snapshot.num_buckets)
+    want = {os.path.basename(f.path) for f in table.snapshot.files if f.bucket == b}
+    assert {os.path.basename(p) for p in pruned.inputFiles()} == want
+    assert len(want) == 1 and len(full.inputFiles()) == 4
+
+
+def test_alter_publishes_through_fileio(spark, tmp_path):
+    """ALTER commits its snapshot through the table's FileIO, so a custom
+    or fault-injecting backend sees it like any other commit."""
+    from tenzir_spark.lake.format import LocalFileIO
+
+    class RecordingIO(LocalFileIO):
+        def __init__(self):
+            self.published = []
+
+        def put_if_absent(self, path, data):
+            self.published.append(os.path.basename(path))
+            return super().put_if_absent(path, data)
+
+    io = RecordingIO()
+    t = LakeTable.create(spark, str(tmp_path / "alter_io"), SCHEMA, "url",
+                         num_buckets=2, io=io)
+    assert io.published == ["v00000001.json"]
+    t.alter([{"op": "add", "name": "tags", "type": "string"}])
+    assert io.published == ["v00000001.json", "v00000002.json"]
+    assert "tags" in LakeTable.load(spark, t.root, io=io).snapshot.schema.fieldNames()
 
 
 def test_checkpoint_lineage(table, spark):
