@@ -1,5 +1,11 @@
-"""CDC apply engine: ordered epoch tail -> schema evolution -> salted
-max-lsn dedup -> MERGE -> exactly-once commit + lineage.
+"""CDC apply engine: ordered epoch tail -> schema evolution -> max-lsn
+dedup -> upsert -> exactly-once commit + lineage.
+
+There is one apply path, ``CdcEngine.run``'s batch loop: ``apply_epoch``,
+``run_stream`` and ``streaming.stream_cdc_apply`` all delegate to it, and
+both write modes share one max-lsn dedup (``LakeTable._dedup``) with two
+plans, picked by the engine's WAL contract and the exact pass-1 key
+count. No env knob tunes the engine.
 
 This is the north rule's pipeline, the Spark reinterpretation of the
 reference's import path (libtenzir/builtins/operators/import.cpp:70 ->
@@ -12,7 +18,6 @@ epoch ledger.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,65 +26,35 @@ from tenzir_spark.cdc.extract import extract_text_udf
 from tenzir_spark.lake.table import LakeTable
 
 
-def _epoch_rows_from_footers(change_log: DataFrame) -> dict[int, int] | None:
-    """Per-epoch row counts read from the parquet footers of an
-    epoch-partitioned file-backed log — a driver-side metadata read that
-    replaces a full-scan discovery aggregate (r6). Returns None when the
-    log is not a local epoch-partitioned parquet directory (streaming
-    micro-batch frames, filtered views, remote filesystems) or has too
-    many files for a cheap footer sweep — callers then fall back to the
-    scan-based discovery."""
+def _epochs_from_paths(change_log: DataFrame) -> list[int] | None:
+    """The epochs of an epoch-partitioned file-backed log, read off its
+    ``epoch=N`` file paths — a driver-side listing that submits no job
+    and opens no file. Returns None when the frame is not the bare file
+    relation (streaming micro-batch frames, filtered views) or its paths
+    carry no epoch partition; run() then discovers by scan."""
     try:
         # bare-scan check: inputFiles() ignores row filters, so a
         # filtered view could "discover" epochs whose surviving row set
         # is empty and wrongly ledger them as applied — only trust the
-        # footers when the frame is the unmodified file relation
+        # paths when the frame is the unmodified file relation
         plan = change_log._jdf.queryExecution().analyzed().toString()
         if not plan.lstrip().startswith("Relation"):
             return None
         files = change_log.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > 4096:
-        return None
-    try:
-        import pyarrow.parquet as pq
-        from urllib.parse import unquote, urlparse
-        out: dict[int, int] = {}
-        for f in files:
-            if "epoch=" not in f or not f.endswith(".parquet"):
-                return None
-            epoch = int(f.split("epoch=")[1].split("/")[0])
-            path = unquote(urlparse(f).path) if f.startswith("file:") else f
-            out[epoch] = out.get(epoch, 0) + pq.ParquetFile(path).metadata.num_rows
-        return out
+        if not files or any("epoch=" not in f for f in files):
+            return None
+        return sorted({int(f.split("epoch=")[1].split("/")[0]) for f in files})
     except Exception:
         return None
 
 
-def salted_deduplicate(df: DataFrame, key: str, lsn_col: str, n_salts: int = 16) -> DataFrame:
-    """Two-phase max-lsn dedup with an explicit salt.
-
-    Phase 1 reduces (key, salt) groups — a hot key's rows spread over
-    ``n_salts`` reducers instead of one; phase 2 reduces the <=n_salts
-    survivors per key. Both phases are hash aggregates with map-side
-    partial aggregation, so even phase 2 never shuffles more than
-    (distinct keys x n_salts) rows. This is the north rule's
-    "salted-repartition to defuse hot-domain skew" expressed as
-    aggregation (cheaper than repartition+window: no sort, no full row
-    shuffle of duplicates).
-    """
-    others = [c for c in df.columns if c != key]
-    salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(n_salts)).cast("int")
-    stage1 = (
-        df.groupBy(F.col(key), salt.alias("__salt"))
-        .agg(F.max_by(F.struct(*[F.col(c) for c in others]), F.col(lsn_col)).alias("__r"))
-    )
-    stage2 = (
-        stage1.groupBy(key)
-        .agg(F.max_by(F.col("__r"), F.col(f"__r.{lsn_col}")).alias("__r"))
-    )
-    return stage2.select(key, *[F.col(f"__r.{c}").alias(c) for c in others])
+def _descriptors(change_log: DataFrame) -> dict[int, list[str]]:
+    """epoch -> its schema-change directives, in one narrow scan."""
+    desc: dict[int, list[str]] = {}
+    for r in (change_log.filter(F.col("op") == "schema")
+              .select("epoch", "schema_descriptor").collect()):
+        desc.setdefault(r[0], []).append(r[1])
+    return desc
 
 
 def descriptor_to_alter(desc: str) -> dict:
@@ -104,52 +79,21 @@ def descriptor_to_alter(desc: str) -> dict:
 
 class CdcEngine:
     """Applies an ordered (lsn, op, payload) change log to a LakeTable
-    epoch by epoch, exactly once."""
+    epoch by epoch, exactly once. The log's lsn is a WAL position, unique
+    per key: the contract that lets the dedup take its broadcast two-pass
+    plan.
+
+    ``n_salts`` is accepted for compatibility and has no effect: the
+    dedup's map-side partial aggregate already collapses hot keys before
+    the exchange, which is what a salt would buy."""
 
     def __init__(self, spark: SparkSession, table: LakeTable, n_salts: int = 16):
         self.spark = spark
         self.table = table
-        self.n_salts = n_salts
 
-    def apply_epoch(self, change_log: DataFrame, epoch: int,
-                    descriptors: list[str] | None = None) -> dict:
-        """``descriptors``: this epoch's schema-change directives, if the
-        caller already fetched them (run() prefetches ALL epochs'
-        descriptors in one job); None -> collect them here."""
-        ek = str(epoch)
-        self.table.refresh()
-        if ek in self.table.snapshot.ledger:
-            return {**self.table.snapshot.ledger[ek], "skipped": True}
-
-        batch = change_log.filter(F.col("epoch") == epoch)
-
-        # 1. schema evolution, transactionally BEFORE the merge (north rule)
-        if descriptors is None:
-            descriptors = [
-                r[0] for r in batch.filter(F.col("op") == "schema")
-                .select("schema_descriptor").collect()
-            ]
-        alters = [descriptor_to_alter(d) for d in descriptors if d]
-        if alters:
-            self.table.alter(alters)
-
-        # 2. shape data rows to the (evolved) table schema
-        shaped, post = self._shape(batch, list(self.table.snapshot.schema.fields))
-
-        if self.table.mode == "mor":
-            # 3+4 fused: the lake clusters by bucket and dedups per
-            # partition in one shuffle (see LakeTable._merge_mor); the
-            # text UDF runs post-dedup inside the same stage.
-            return self.table.merge(shaped, epoch, pre_deduplicated=False,
-                                    post_dedup=post)
-
-        # CoW: 3. max-lsn dedup per key, salted against hot-domain skew
-        key = self.table.snapshot.key_col
-        deduped = salted_deduplicate(shaped, key, "lsn", self.n_salts)
-        if post is not None:
-            deduped = post(deduped)
-        # 4. MERGE under the idempotent ledger
-        return self.table.merge(deduped, epoch)
+    def apply_epoch(self, change_log: DataFrame, epoch: int) -> dict:
+        """Apply one epoch of ``change_log``; returns its ledger entry."""
+        return self.run(change_log, epochs=[epoch])[0]
 
     def _shape(self, batch: DataFrame, schema_fields: list,
                added_gate: dict[str, int] | None = None):
@@ -188,99 +132,72 @@ class CdcEngine:
         return data.select(*cols), post
 
     def run(self, change_log: DataFrame, epochs: list[int] | None = None,
-            max_inflight: int | None = None,
-            max_coalesce: int | None = None) -> list[dict]:
+            max_inflight: int = 2, max_coalesce: int = 8) -> list[dict]:
         """Tail the log in epoch order (resumable: already-applied epochs
-        short-circuit via the ledger).
+        short-circuit via the ledger); returns one ledger entry per epoch.
 
-        ONE upfront scan discovers both the epoch list and every epoch's
-        schema directives (collect_list skips the nulls of non-schema
-        rows) — serial pre-work is a single job regardless of epoch
-        count, which matters because per-epoch serial cost is the Amdahl
-        term of the whole apply path (BASELINE.md).
+        Discovery: when the log is the bare relation of an
+        epoch-partitioned file log, the epoch list comes from its file
+        paths and the only scan is the op=='schema' descriptor filter,
+        pruned to three narrow columns. Any other frame (an in-memory
+        log, a streaming micro-batch) is discovered by ONE scan that
+        collects the epoch list and every epoch's directives together
+        (collect_list skips the nulls of non-schema rows). Given
+        ``epochs``, only the descriptor scan runs, limited to them.
+
+        Every batch then takes the same steps: its alters, in epoch
+        order; the shape against the evolved schema; the max-lsn dedup,
+        whose plan the table picks from the engine's WAL contract and the
+        exact pass-1 key count (LakeTable._dedup; the ledger entry records
+        it as ``plan``); the write; the commit.
 
         MoR mode COALESCES a backlog: runs of up to ``max_coalesce``
-        (default 8) consecutive pending epochs with no schema directive
-        between them apply as ONE job — union the epochs, max-lsn dedup
-        across the whole range, one delta write, one atomic commit that
-        ledgers every constituent epoch (merge_commit_batch). This is
-        semantically transparent: lsn is globally monotone, so the
-        per-key max-lsn survivor of the union is exactly the row
-        sequential application would leave visible, and the MoR read
-        path merges deltas by max lsn anyway. What it buys is
-        amortization of the per-epoch fixed cost that profiling
-        (tools/cdc_profile.py) shows dominates small epochs — the Spark
-        job itself (scheduling, python workers, 32 parquet
-        opens/closes), ~5-6 s per 1M-event epoch on this host, against
-        commit+checkpoint at ~5 ms. A batch never spans a schema-change
-        epoch: alters apply in epoch order at batch boundaries, so every
-        batch is shaped against one frozen schema view. A LIVE tail
-        (epoch-by-epoch arrival) degenerates to batches of 1 — coalescing
-        engages exactly when there's a backlog to catch up on, the same
-        adaptive batching a Structured Streaming microbatch trigger does.
+        consecutive pending epochs with no RENAME between them apply as
+        ONE job — union the epochs, max-lsn dedup across the whole
+        range, one delta write, one atomic commit that ledgers every
+        constituent epoch (merge_commit_batch). This is semantically
+        transparent: lsn is globally monotone, so the per-key max-lsn
+        survivor of the union is exactly the row sequential application
+        would leave visible, and the MoR read path merges deltas by max
+        lsn anyway. What it buys is amortization of the per-epoch fixed
+        cost that dominates small epochs — the Spark job itself
+        (scheduling, python workers, parquet opens/closes), against
+        commit+checkpoint at ~5 ms. A LIVE tail (epoch-by-epoch arrival)
+        degenerates to batches of 1 — coalescing engages exactly when
+        there's a backlog to catch up on, the same adaptive batching a
+        Structured Streaming microbatch trigger does.
 
-        MoR also PIPELINES batches: up to ``max_inflight`` (default 2)
-        batch PREPARE jobs (scan -> dedup -> delta write) run
-        concurrently — a delta never reads the target, so only the
-        ledger COMMIT must stay ordered. Measured honestly (round 5,
-        local[32], 16M events, pre-coalescing): break-even on this
-        saturated single host (24.8 s vs 25.0 s at 4x4M epochs; 99.7 s
-        vs 102.8 s at 16x1M — the prepare job already uses every core).
-        The overlap pays on a real cluster where the driver's per-epoch
-        serial work and stragglers leave executors idle between jobs;
-        here it simply doesn't hurt. Each batch's files carry the
-        schema_epoch tag of the view they were shaped against, so
-        _align's rename/add replay stays exact even when a later
-        batch's ALTER is already live. On a prepare failure nothing
-        from that batch onward commits — already-prepared later files
-        are orphans reclaimed by expire_snapshots' grace window, and a
-        rerun resumes from the ledger. Both disabled for CoW, where
-        epoch N+1's merge reads the state epoch N wrote.
+        MoR also PIPELINES batches: up to ``max_inflight`` batch PREPARE
+        jobs (scan -> dedup -> delta write) run concurrently — a delta
+        never reads the target, so only the ledger COMMIT must stay
+        ordered. Measured (round 5, local[32], 16M events): break-even on
+        a saturated single host, where the prepare job already uses
+        every core; the overlap pays on a cluster where the driver's
+        per-batch serial work and stragglers leave executors idle
+        between jobs. Each batch's files carry the schema_epoch tag of
+        the view they were shaped against, so _align's rename/add replay
+        stays exact even when a later batch's ALTER is already live. On
+        a prepare failure nothing from that batch onward commits —
+        already-prepared later files are orphans reclaimed by
+        expire_snapshots' grace window, and a rerun resumes from the
+        ledger.
+
+        CoW applies one epoch per batch, one batch in flight: epoch N+1's
+        merge reads the state epoch N wrote.
         """
-        kest: dict[int, int] = {}
-        rest: dict[int, int] | None = None
-        if epochs is None:
-            # discovery, cheapest first: when the log is file-backed and
-            # epoch-partitioned, per-epoch ROW counts come straight from
-            # the parquet footers (driver metadata read, no job) and the
-            # only scan is the op=='schema' descriptor filter — pruned to
-            # three narrow columns. _prepare_mor turns the row bound into
-            # an EXACT key count via its checkpointed pass-1 aggregate.
-            # Non-file logs keep the r5 single-pass discovery whose
-            # approx_count_distinct rides the scan; its per-batch sum
-            # gates the broadcast two-pass dedup the same way.
-            rest = _epoch_rows_from_footers(change_log)
-            if rest is not None:
-                epochs = sorted(rest)
-                desc = {e: [] for e in epochs}
-                for r in (change_log.filter(F.col("op") == "schema")
-                          .select("epoch", "schema_descriptor").collect()):
-                    desc.setdefault(r[0], []).append(r[1])
-            else:
-                keyc = self.table.snapshot.key_col
-                rows = (change_log.groupBy("epoch").agg(
-                    F.collect_list(F.when(F.col("op") == "schema",
-                                          F.col("schema_descriptor"))).alias("ds"),
-                    F.approx_count_distinct(keyc).alias("ks"))
-                    .collect())
-                epochs = sorted(r["epoch"] for r in rows)
-                desc = {r["epoch"]: [d for d in r["ds"] if d] for r in rows}
-                kest = {r["epoch"]: int(r["ks"]) for r in rows}
+        if epochs is not None:
+            desc = _descriptors(change_log.filter(F.col("epoch").isin(epochs)))
+        elif (epochs := _epochs_from_paths(change_log)) is not None:
+            desc = _descriptors(change_log)
         else:
-            desc = {}
-            for r in (change_log.filter(F.col("op") == "schema")
-                      .select("epoch", "schema_descriptor").collect()):
-                desc.setdefault(r[0], []).append(r[1])
-        if max_inflight is None:
-            max_inflight = int(os.environ.get("TENZIR_SPARK_CDC_INFLIGHT", "2"))
-        if max_coalesce is None:
-            max_coalesce = int(os.environ.get("TENZIR_SPARK_CDC_COALESCE", "8"))
-        if self.table.mode != "mor":
-            return [self.apply_epoch(change_log, e, descriptors=desc.get(e, []))
-                    for e in epochs]
+            rows = (change_log.groupBy("epoch").agg(
+                F.collect_list(F.when(F.col("op") == "schema",
+                                      F.col("schema_descriptor"))).alias("ds"))
+                .collect())
+            epochs = sorted(r["epoch"] for r in rows)
+            desc = {r["epoch"]: [d for d in r["ds"] if d] for r in rows}
         return self._run_batched(change_log, epochs, desc,
-                                 max(max_inflight, 1), max(max_coalesce, 1),
-                                 kest=kest, rest=rest)
+                                 max_inflight, max_coalesce)
 
     def _batches(self, epochs: list[int], desc: dict,
                  max_coalesce: int) -> list[list[int]]:
@@ -315,11 +232,13 @@ class CdcEngine:
 
     def _run_batched(self, change_log: DataFrame, epochs: list[int],
                      desc: dict, max_inflight: int,
-                     max_coalesce: int,
-                     kest: dict[int, int] | None = None,
-                     rest: dict[int, int] | None = None) -> list[dict]:
+                     max_coalesce: int) -> list[dict]:
         from concurrent.futures import ThreadPoolExecutor
 
+        cow = self.table.mode != "mor"
+        if cow:
+            max_inflight = max_coalesce = 1
+        max_inflight, max_coalesce = max(max_inflight, 1), max(max_coalesce, 1)
         self.table.refresh()
         results: dict[int, dict] = {}
         pending: list[int] = []
@@ -360,21 +279,16 @@ class CdcEngine:
                         change_log.filter(
                             F.col("epoch").between(batch[0], batch[-1])),
                         fields, added_gate=added)
-                    # batch key estimate: sum of per-epoch approx counts —
-                    # an upper bound on the union (overlap only shrinks
-                    # it), so an overestimate errs toward the safe
-                    # at-scale fallback, never toward an oversized
-                    # broadcast
-                    batch_est = (sum(kest.get(e, 0) for e in batch)
-                                 if kest and all(e in kest for e in batch)
-                                 else None)
-                    batch_rows = (sum(rest.get(e, 0) for e in batch)
-                                  if rest and all(e in rest for e in batch)
-                                  else None)
+                    if cow:
+                        # merged and committed in place: the next batch's
+                        # merge reads what this one wrote
+                        results[batch[0]] = self.table._merge_cow(
+                            shaped, str(batch[0]), "op", "lsn", False, post,
+                            unique_lsn=True)
+                        continue
                     submitted.append((batch, ex.submit(
                         self.table._prepare_mor, shaped, "op", "lsn",
-                        False, post, fields, sepoch, batch_est,
-                        batch_rows)))
+                        False, post, fields, sepoch, True)))
                 for batch, fut in submitted:
                     new_files, entry = fut.result()
                     got = self.table.merge_commit_batch(
@@ -390,8 +304,7 @@ class CdcEngine:
 
     def run_stream(self, log_dir: str, checkpoint_dir: str,
                    trigger: dict | None = None,
-                   max_inflight: int | None = None,
-                   max_coalesce: int | None = None):
+                   max_inflight: int = 2, max_coalesce: int = 8):
         """LIVE tail: Structured Streaming file source over the growing
         epoch-partitioned change log, applied per micro-batch through
         the same run() path (coalescing + ledger).
@@ -428,7 +341,6 @@ class CdcEngine:
         def apply_batch(batch_df, batch_id):
             if not batch_df.head(1):
                 return
-            self.table.refresh()
             self.run(batch_df, max_inflight=max_inflight,
                      max_coalesce=max_coalesce)
 

@@ -4,6 +4,7 @@ and an exactly-once epoch ledger. See format.py for the on-disk layout.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -26,6 +27,7 @@ from tenzir_spark.lake.format import (
     string_bucket,
     write_snapshot_atomic,
 )
+from tenzir_spark.operators.limit import deduplicate
 
 try:
     import pyarrow.parquet as pq
@@ -232,11 +234,7 @@ class LakeTable:
         """MoR read-time resolution: one row per key (max __lsn), deletes
         dropped. Hash aggregate with partial (map-side) aggregation — the
         skew-safe shape (see operators.deduplicate)."""
-        key = self.snapshot.key_col
-        others = [c for c in raw.columns if c != key]
-        row = F.max_by(F.struct(*[F.col(c) for c in others]), F.col("__lsn"))
-        out = raw.groupBy(key).agg(row.alias("__r"))
-        out = out.select(key, *[F.col(f"__r.{c}").alias(c) for c in others])
+        out = deduplicate(raw, self.snapshot.key_col, "__lsn")
         return out.filter(F.col("__op") != "delete").drop("__lsn", "__op")
 
     def row_count(self) -> int:
@@ -333,100 +331,176 @@ class LakeTable:
         ``changes`` must hold one row per key (pre-deduplicated, e.g. by
         operators.deduplicate max-lsn) with columns: key, ``op_col`` in
         insert|update|delete|upsert, ``lsn_col``, plus the current table
-        payload columns. Copy-on-write at bucket granularity: only buckets
-        containing changed keys are rewritten; files of untouched buckets
-        carry over by reference.
+        payload columns. ``pre_deduplicated=False`` dedups here with the
+        tie-safe ``maxby`` plan (see _dedup): a caller outside CdcEngine
+        need not hold the WAL contract — the TQL ``import`` sink stamps
+        lsn=0 on every row. Copy-on-write at bucket granularity: only
+        buckets containing changed keys are rewritten; files of untouched
+        buckets carry over by reference.
 
         Returns the ledger entry. If ``epoch`` is already in the ledger the
         call is a no-op (idempotent replay — the north rule's
         (checkpoint_epoch, partition_id) convergence quarantee comes from
         the ledger plus the atomic snapshot swap).
         """
-        key = self.snapshot.key_col
         ek = str(epoch)
         if ek in self.snapshot.ledger:
             return {**self.snapshot.ledger[ek], "skipped": True}
-
         if self.mode == "mor":
-            return self._merge_mor(changes, ek, op_col, lsn_col,
-                                   pre_deduplicated, post_dedup)
-        if not pre_deduplicated:
-            from tenzir_spark.operators.limit import deduplicate as _dedup
-            changes = _dedup(changes, self.snapshot.key_col, lsn_col)
-        if post_dedup is not None:
-            changes = post_dedup(changes)
+            new_files, entry = self._prepare_mor(changes, op_col, lsn_col,
+                                                 pre_deduplicated, post_dedup)
+            return self.merge_commit(ek, new_files, entry)
+        return self._merge_cow(changes, ek, op_col, lsn_col,
+                               pre_deduplicated, post_dedup)
 
-        nb = self.snapshot.num_buckets
-        changes = changes.withColumn("__bucket", bucket_expr(key, nb))
-        # cache: the change set feeds (a) the stats collect and (b) the
-        # merge join — without this the dedup + UDF lineage runs twice
-        changes = changes.persist()
-        # one try owns the persist: the stats collect, the empty-epoch
-        # early return, and the merge loop all release it on every path
-        # (an exception in the collect or a `return` must not leak blocks)
-        try:
-            # small collect: epoch-level apply stats + touched bucket ids
-            agg = changes.groupBy().agg(
-                F.collect_set("__bucket").alias("buckets"),
-                F.count(F.lit(1)).alias("rows"),
-                F.max(lsn_col).alias("watermark"),
-            ).collect()[0]
-            touched = sorted(agg["buckets"] or [])
-            if not touched:
-                entry = {"rows_applied": 0, "lsn_watermark": None,
-                         "committed_at": time.time()}
-                self._commit_files([], replace_buckets=[], epoch=ek,
-                                   epoch_stats=entry)
-                return entry
+    def _merge_cow(self, changes: DataFrame, ek: str, op_col: str,
+                   lsn_col: str, pre_deduplicated: bool = True,
+                   post_dedup=None, unique_lsn: bool = False) -> dict:
+        """Copy-on-write MERGE of one epoch: dedup (see _dedup), then the
+        touched buckets' target rows full-outer-joined with the change set,
+        rewritten and committed under the ledger."""
+        key = self.snapshot.key_col
+        with self._dedup(changes, lsn_col, pre_deduplicated,
+                         unique_lsn) as (changes, plan, stats):
+            if post_dedup is not None:
+                changes = post_dedup(changes)
+            nb = self.snapshot.num_buckets
+            changes = changes.withColumn("__bucket", bucket_expr(key, nb))
+            # cache: the change set feeds the stats collect (unless pass 1
+            # gave the stats) and every merge attempt — without this the
+            # dedup + UDF lineage runs again for each
+            changes = changes.persist()
+            # one try owns the persist: the stats collect, the empty-epoch
+            # early return, and the merge loop all release it on every path
+            # (an exception in the collect or a `return` must not leak blocks)
+            try:
+                if stats is None:
+                    # small collect: epoch-level apply stats + touched
+                    # bucket ids (bcast2pass read them off pass 1)
+                    stats = changes.groupBy().agg(
+                        F.collect_set("__bucket").alias("buckets"),
+                        F.count(F.lit(1)).alias("rows"),
+                        F.max(lsn_col).alias("watermark"),
+                    ).collect()[0]
+                touched = sorted(stats["buckets"] or [])
+                if not touched:
+                    entry = {"rows_applied": 0, "lsn_watermark": None,
+                             "committed_at": time.time(), "plan": plan}
+                    self._commit_files([], replace_buckets=[], epoch=ek,
+                                       epoch_stats=entry)
+                    return entry
 
-            payload_cols = [f.name for f in self.snapshot.schema.fields]
-            ch = changes.select(
-                F.col(key).alias("__k"),
-                F.col(op_col).alias("__op"),
-                *[F.col(c).alias(f"__c_{c}") for c in payload_cols if c != key],
-            )
-            entry = {"rows_applied": int(agg["rows"]),
-                     "lsn_watermark": int(agg["watermark"]) if agg["watermark"] is not None else None,
-                     "committed_at": time.time()}
-            for _ in range(5):
-                # the merge is computed against base's file set; commit
-                # validates those buckets are unchanged and we recompute
-                # against the refreshed table otherwise — no concurrent
-                # writer's files are ever silently dropped
-                base = self.snapshot
-                target = self.read(buckets=touched)
-                joined = target.join(ch, target[key] == ch["__k"], "full_outer")
-                is_change = F.col("__k").isNotNull()
-                is_delete = is_change & (F.col("__op") == "delete")
-                merged = joined.filter(~F.coalesce(is_delete, F.lit(False))).select(
-                    F.when(is_change, F.col("__k")).otherwise(F.col(key)).alias(key),
-                    *[
-                        F.when(is_change, F.col(f"__c_{c}")).otherwise(F.col(c)).alias(c)
-                        for c in payload_cols if c != key
-                    ],
+                payload_cols = [f.name for f in self.snapshot.schema.fields]
+                ch = changes.select(
+                    F.col(key).alias("__k"),
+                    F.col(op_col).alias("__op"),
+                    *[F.col(c).alias(f"__c_{c}") for c in payload_cols if c != key],
                 )
-                new_files = self._write_bucketed(merged, only_buckets=touched)
-                try:
-                    self._commit_files(new_files, replace_buckets=touched, epoch=ek,
-                                       epoch_stats=entry, base_files=base.files)
-                    break
-                except ConcurrentMergeConflict:
-                    self.refresh()
-                    if ek in self.snapshot.ledger:
-                        return {**self.snapshot.ledger[ek], "skipped": True}
-            else:
-                raise ConcurrentMergeConflict(
-                    "exhausted merge recompute retries for epoch " + ek)
-        finally:
-            changes.unpersist()
+                entry = {"rows_applied": int(stats["rows"]),
+                         "lsn_watermark": int(stats["watermark"]) if stats["watermark"] is not None else None,
+                         "committed_at": time.time(), "plan": plan}
+                for _ in range(5):
+                    # the merge is computed against base's file set; commit
+                    # validates those buckets are unchanged and we recompute
+                    # against the refreshed table otherwise — no concurrent
+                    # writer's files are ever silently dropped
+                    base = self.snapshot
+                    target = self.read(buckets=touched)
+                    joined = target.join(ch, target[key] == ch["__k"], "full_outer")
+                    is_change = F.col("__k").isNotNull()
+                    is_delete = is_change & (F.col("__op") == "delete")
+                    merged = joined.filter(~F.coalesce(is_delete, F.lit(False))).select(
+                        F.when(is_change, F.col("__k")).otherwise(F.col(key)).alias(key),
+                        *[
+                            F.when(is_change, F.col(f"__c_{c}")).otherwise(F.col(c)).alias(c)
+                            for c in payload_cols if c != key
+                        ],
+                    )
+                    new_files = self._write_bucketed(merged, only_buckets=touched)
+                    try:
+                        self._commit_files(new_files, replace_buckets=touched, epoch=ek,
+                                           epoch_stats=entry, base_files=base.files)
+                        break
+                    except ConcurrentMergeConflict:
+                        self.refresh()
+                        if ek in self.snapshot.ledger:
+                            return {**self.snapshot.ledger[ek], "skipped": True}
+                else:
+                    raise ConcurrentMergeConflict(
+                        "exhausted merge recompute retries for epoch " + ek)
+            finally:
+                changes.unpersist()
         self._write_checkpoints(ek, new_files, entry)
         return entry
 
-    def _merge_mor(self, changes: DataFrame, ek: str, op_col: str, lsn_col: str,
-                   pre_deduplicated: bool = True, post_dedup=None) -> dict:
-        new_files, entry = self._prepare_mor(changes, op_col, lsn_col,
-                                             pre_deduplicated, post_dedup)
-        return self.merge_commit(ek, new_files, entry)
+    @contextlib.contextmanager
+    def _dedup(self, df: DataFrame, lsn_col: str, pre_deduplicated: bool,
+               unique_lsn: bool):
+        """The max-lsn dedup of both write modes. Yields ``(df, plan,
+        stats)``: ``df`` holds one row per key, ``plan`` names how —
+        ``none`` when ``pre_deduplicated``, else one of two plans, gated by
+        the caller's contract and an exact key count (no estimate).
+        ``stats`` (rows, watermark, touched buckets of ``df``) comes free
+        with pass 1 and is None otherwise:
+
+        * **bcast2pass** — only with ``unique_lsn``, the WAL contract that
+          lsn is unique per key (CdcEngine holds it; with tied lsns the
+          semi-join below would keep every tied row). Pass 1 aggregates
+          max(lsn) per key — a fixed-width agg buffer, ~4x cheaper per row
+          than copying a payload struct — capped at max_bcast+1 rows (env
+          TENZIR_SPARK_DEDUP_BCAST_KEYS, default 1M keys / ~64 MB) and
+          eagerly localCheckpointed, so the exact key count is read off
+          the materialised frame and the broadcast build never
+          recomputes the aggregate; it is released when the caller's
+          block exits. Pass 2 re-scans
+          the batch with a broadcast left-semi join on (key, lsn). Before
+          the join, rows with ``lsn < min over keys of max(lsn)`` are
+          dropped — an always-correct superset filter (every survivor's
+          lsn is its key's max) that reaches the parquet scan as a pushed
+          predicate: on an lsn-ordered log (any WAL) it prunes whole row
+          groups — 94.7% of the bench log's rows never decode. No
+          payload-carrying shuffle: the only exchange is the tiny pass-1
+          aggregate. One survivor per key, so pass 1's key count, max
+          lsn and key buckets are ``df``'s row count, watermark and
+          touched buckets.
+        * **maxby** — operators.deduplicate's struct max_by, whose map-side
+          partial aggregate collapses hot keys (Zipf domains) to one row
+          per input partition BEFORE the exchange — the north rule's skew
+          defense for free, which is why no salt is needed. Taken without
+          the contract, or when pass 1 overflows max_bcast (the
+          10^10-scale regime where a batch touches hundreds of millions
+          of keys)."""
+        if pre_deduplicated:
+            yield df, "none", None
+            return
+        key = self.snapshot.key_col
+        if unique_lsn:
+            max_bcast = int(os.environ.get("TENZIR_SPARK_DEDUP_BCAST_KEYS",
+                                           "1000000"))
+            mx = (df.groupBy(key).agg(F.max(lsn_col).alias("__mx"))
+                  .limit(max_bcast + 1).localCheckpoint(eager=True))
+            try:
+                stats = mx.agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.min("__mx").alias("lo"),
+                    F.max("__mx").alias("watermark"),
+                    F.collect_set(bucket_expr(key, self.snapshot.num_buckets))
+                    .alias("buckets")).collect()[0]
+                if stats["rows"] <= max_bcast:
+                    if stats["lo"] is not None:
+                        df = df.filter(F.col(lsn_col) >= F.lit(stats["lo"]))
+                    yield df.join(
+                        F.broadcast(mx.select(F.col(key).alias("__mxk"),
+                                              "__mx")),
+                        (F.col(key) == F.col("__mxk"))
+                        & (F.col(lsn_col) == F.col("__mx")),
+                        "leftsemi"), "bcast2pass", stats
+                    return
+            finally:
+                # a checkpointed RDD stays registered until a JVM GC runs
+                # the ContextCleaner: release it now
+                mx._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        yield deduplicate(df, key, lsn_col), "maxby", None
 
     def merge_commit(self, ek: str, new_files: list[DataFile], entry: dict) -> dict:
         """Publish a prepared MoR delta: ledger entry + snapshot swap +
@@ -470,10 +544,10 @@ class LakeTable:
                      pre_deduplicated: bool = True, post_dedup=None,
                      schema_fields: list | None = None,
                      schema_epoch: int | None = None,
-                     key_est: int | None = None,
-                     rows_est: int | None = None) -> tuple[list[DataFile], dict]:
-        """Merge-on-read apply: the epoch's heavy shuffle carries only
-        per-partition dedup SURVIVORS, never raw duplicates.
+                     unique_lsn: bool = False) -> tuple[list[DataFile], dict]:
+        """Merge-on-read apply: dedup (see _dedup; the entry records its
+        plan), then one delta write — the heavy shuffle carries only
+        dedup SURVIVORS, never raw duplicates.
 
         ``schema_fields``/``schema_epoch`` freeze the schema view the
         delta is shaped against — under a pipelined tail a LATER epoch's
@@ -481,41 +555,8 @@ class LakeTable:
         runs, and files must be tagged with the schema they actually
         contain so _align replays exactly the right rename/add suffix.
 
-        With ``pre_deduplicated=False`` the max-lsn dedup picks one of
-        two plans by the batch's (estimated) distinct-key count:
-
-        * **broadcast two-pass** (attempted when the batch's footer row
-          count ``rows_est`` is bounded — default <=512M rows, env
-          TENZIR_SPARK_CDC_EXACT_MAX_ROWS — or an HLL ``key_est`` says
-          the key set is small, default <=1M keys / ~64 MB): pass 1
-          aggregates max(lsn) per key — a FIXED-WIDTH agg buffer that
-          updates in place, ~4x cheaper per row than copying a payload
-          struct — capped at max_bcast+1 rows and EAGERLY
-          localCheckpointed, so the exact key count is read off the
-          materialized frame (r6: replaces the per-run HLL estimate
-          job) and the broadcast build never recomputes the aggregate.
-          Pass 2 re-scans the batch with a broadcast left-semi join on
-          (key, lsn), keeping survivors with their payload pipelined
-          straight into the bucket repartition. Before the join, rows
-          with ``lsn < min over keys of max(lsn)`` are dropped — an
-          always-correct superset filter (every survivor's lsn is its
-          key's max, hence >= the smallest such max) that reaches the
-          parquet scan as a pushed predicate: on an lsn-ordered log
-          (any WAL) it prunes whole row groups — 94.7% of the bench
-          log's rows never decode (64M -> 3.4M). No payload-carrying
-          shuffle AT ALL: the only exchange is the tiny pass-1 agg.
-          Requires lsn to be unique per key within the batch (a WAL
-          position — the log contract).
-        * **struct max_by fallback** (no bound at all, or the
-          checkpointed pass 1 overflows max_bcast — the 10^10-scale
-          regime where a batch touches hundreds of millions of urls):
-          groupBy(__bucket, key) with a map-side partial aggregate, so
-          hot keys (Zipf domains) collapse to one row per input
-          partition BEFORE the exchange — the north rule's skew defense
-          for free — and only survivors shuffle.
-
-        Both paths end with an EXPLICIT nb-partition repartition (see
-        _distribute_by_bucket) so the post-dedup text UDF and the
+        A deduped batch ends with an EXPLICIT nb-partition repartition
+        (see _distribute_by_bucket) so the post-dedup text UDF and the
         parquet write spread over ~nb tasks.
 
         No target read, no join against the table; rows_applied and the
@@ -533,52 +574,21 @@ class LakeTable:
             F.col(lsn_col).cast("long").alias("__lsn"),
             F.col(op_col).alias("__op"),
         )
-        clustered = False
-        if not pre_deduplicated:
-            max_bcast = int(os.environ.get("TENZIR_SPARK_DEDUP_BCAST_KEYS",
-                                           "1000000"))
-            exact_rows = int(os.environ.get(
-                "TENZIR_SPARK_CDC_EXACT_MAX_ROWS", str(512_000_000)))
-            mx = None
-            if ((rows_est is not None and 0 < rows_est <= exact_rows)
-                    or (key_est is not None and 0 < key_est <= max_bcast)):
-                mx = (delta.groupBy(key)
-                      .agg(F.max("__lsn").alias("__mx"))
-                      .limit(max_bcast + 1)
-                      .localCheckpoint(eager=True))
-                stats = mx.agg(F.count(F.lit(1)).alias("n"),
-                               F.min("__mx").alias("m")).collect()[0]
-                if stats["n"] > max_bcast:
-                    mx = None  # key set too large: at-scale fallback
-            if mx is not None:
-                lo = stats["m"]
-                if lo is not None:
-                    delta = delta.filter(F.col("__lsn") >= F.lit(lo))
-                delta = delta.join(
-                    F.broadcast(mx.select(F.col(key).alias("__mxk"),
-                                          "__mx")),
-                    (F.col(key) == F.col("__mxk"))
-                    & (F.col("__lsn") == F.col("__mx")),
-                    "leftsemi")
-                delta = delta.withColumn("__b", bucket_expr(key, nb))
-            else:
-                delta = delta.withColumn("__b", bucket_expr(key, nb))
-                others = [c for c in delta.columns if c not in (key, "__b")]
-                row = F.max_by(F.struct(*[F.col(c) for c in others]),
-                               F.col("__lsn"))
-                delta = (delta.groupBy("__b", key).agg(row.alias("__r"))
-                         .select("__b", key,
-                                 *[F.col(f"__r.{c}").alias(c) for c in others]))
-            delta = _distribute_by_bucket(delta, nb)
-            clustered = True
-        if post_dedup is not None:
-            delta = post_dedup(delta)
-        # typed nulls for schema columns the stream didn't carry
-        for f in schema_fields:
-            if f.name not in delta.columns:
-                delta = delta.withColumn(f.name, F.lit(None).cast(f.dataType))
-        new_files = self._write_bucketed(delta, kind="delta", clustered=clustered,
-                                         schema_epoch=schema_epoch)
+        with self._dedup(delta, "__lsn", pre_deduplicated,
+                         unique_lsn) as (delta, plan, _):
+            clustered = plan != "none"
+            if clustered:
+                delta = _distribute_by_bucket(
+                    delta.withColumn("__b", bucket_expr(key, nb)), nb)
+            if post_dedup is not None:
+                delta = post_dedup(delta)
+            # typed nulls for schema columns the stream didn't carry
+            for f in schema_fields:
+                if f.name not in delta.columns:
+                    delta = delta.withColumn(f.name, F.lit(None).cast(f.dataType))
+            new_files = self._write_bucketed(delta, kind="delta",
+                                             clustered=clustered,
+                                             schema_epoch=schema_epoch)
         watermark = None
         for f in new_files:
             st = f.stats.get("__lsn")
@@ -586,7 +596,7 @@ class LakeTable:
                 watermark = st["max"] if watermark is None else max(watermark, st["max"])
         entry = {"rows_applied": int(sum(f.rows for f in new_files)),
                  "lsn_watermark": int(watermark) if watermark is not None else None,
-                 "committed_at": time.time()}
+                 "committed_at": time.time(), "plan": plan}
         return new_files, entry
 
     # ------------------------------------------------------------- internals
@@ -996,11 +1006,7 @@ class LakeTable:
                         return
                     base = self.snapshot
             raw = self.read(buckets=need, resolve=False)
-            key = self.snapshot.key_col
-            others = [c for c in raw.columns if c != key]
-            row = F.max_by(F.struct(*[F.col(c) for c in others]), F.col("__lsn"))
-            resolved = (raw.groupBy(key).agg(row.alias("__r"))
-                        .select(key, *[F.col(f"__r.{c}").alias(c) for c in others]))
+            resolved = deduplicate(raw, self.snapshot.key_col, "__lsn")
             if purge_deletes_below_lsn is not None:
                 resolved = resolved.filter(
                     (F.col("__op") != "delete")

@@ -13,7 +13,6 @@ from tenzir_spark.cdc import (
     gen_change_log,
     pages_schema,
     replay,
-    salted_deduplicate,
 )
 from tenzir_spark.lake import LakeTable
 
@@ -124,14 +123,6 @@ def test_ledger_watermarks_monotone(applied):
     cp = table.checkpoints()
     n = cp.select("checkpoint_epoch").distinct().count()
     assert n == N_EVENTS // EPOCH_SIZE
-
-
-def test_salted_dedup_equals_plain_dedup(spark, change_log):
-    from tenzir_spark.operators import deduplicate
-    data = change_log.filter("op != 'schema'").select("url", "lsn", "op", "lang")
-    a = salted_deduplicate(data, "url", "lsn", n_salts=4)
-    b = deduplicate(data, "url", "lsn")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_batches_split_on_rename_gap_and_cap():
@@ -252,20 +243,19 @@ def test_mor_final_state_matches_replay(spark, change_log, tmp_path_factory):
 
 def test_footer_and_scan_discovery_identical(spark, change_log,
                                              tmp_path_factory, monkeypatch):
-    """r6: run() discovers epochs/row-bounds from parquet footers when
-    the log is file-backed (no discovery job, exact checkpointed pass-1
-    with the lsn watermark prefilter); non-file logs keep the scan+HLL
+    """run() discovers epochs from the file paths when the log is
+    file-backed (no discovery job); non-file logs keep the scan
     discovery. Both must leave byte-identical final state on the same
     log."""
     import tenzir_spark.cdc.engine as eng_mod
     log_dir = str(tmp_path_factory.mktemp("cdclog") / "log")
     change_log.write.mode("overwrite").partitionBy("epoch").parquet(log_dir)
     plog = spark.read.parquet(log_dir)
-    assert eng_mod._epoch_rows_from_footers(plog), "footer path must engage"
+    assert eng_mod._epochs_from_paths(plog), "path discovery must engage"
     states = []
     for force_scan in (False, True):
         if force_scan:
-            monkeypatch.setattr(eng_mod, "_epoch_rows_from_footers",
+            monkeypatch.setattr(eng_mod, "_epochs_from_paths",
                                 lambda df: None)
         root = str(tmp_path_factory.mktemp(f"lake_f{force_scan}") / "pages")
         table = LakeTable.create(spark, root, pages_schema(), "url",

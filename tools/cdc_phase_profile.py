@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from tenzir_spark.session import get_spark
 from tenzir_spark.cdc import CdcEngine, gen_change_log, pages_schema
+from tenzir_spark.cdc.engine import _descriptors, _epochs_from_paths
 from tenzir_spark.lake import LakeTable
 from tenzir_spark.lake import table as table_mod
 
@@ -115,12 +116,8 @@ def main():
     t_all = time.perf_counter()
     # ---- replicate run()'s discovery with a timer ----
     t0 = time.perf_counter()
-    rows = (log.groupBy("epoch").agg(
-        F.collect_list(F.when(F.col("op") == "schema",
-                              F.col("schema_descriptor"))).alias("ds"))
-        .collect())
-    epochs = sorted(r["epoch"] for r in rows)
-    desc = {r["epoch"]: [d for d in r["ds"] if d] for r in rows}
+    epochs = _epochs_from_paths(log)
+    desc = _descriptors(log)
     phases["discovery"] = time.perf_counter() - t0
 
     eng._run_batched(log, epochs, desc, max_inflight=2, max_coalesce=8)

@@ -77,21 +77,13 @@ def main():
                              "url", num_buckets=32, write_mode="mor")
     eng = CdcEngine(spark, table)
 
-    # replicate run()'s prefetch off the clock
-    rows = (log.groupBy("epoch").agg(
-        __import__("pyspark.sql.functions", fromlist=["F"]).collect_list(
-            __import__("pyspark.sql.functions", fromlist=["F"]).when(
-                __import__("pyspark.sql.functions", fromlist=["F"]).col("op") == "schema",
-                __import__("pyspark.sql.functions", fromlist=["F"]).col("schema_descriptor"))).alias("ds"))
-        .collect())
-    epochs = sorted(r["epoch"] for r in rows)
-    desc = {r["epoch"]: [d for d in r["ds"] if d] for r in rows}
+    epochs = sorted(r[0] for r in log.select("epoch").distinct().collect())
 
     t_all = time.perf_counter()
     for e in epochs:
         timings.append({"epoch": e})
         t0 = time.perf_counter()
-        eng.apply_epoch(log, e, descriptors=desc.get(e, []))
+        eng.apply_epoch(log, e)
         timings[-1]["epoch_total"] = time.perf_counter() - t0
     total = time.perf_counter() - t_all
 

@@ -36,10 +36,11 @@ AUDIT = ["where_select", "summarize", "sort", "join_agg", "tpch_q6",
 CDC_FOOTER = """
 ## cdc broadcast two-pass dedup (engine path, `lake/table.py _prepare_mor`)
 
-Not a board query — the plan `_prepare_mor` builds when the batch's
-estimated key count fits a broadcast (r5; the at-scale struct-`max_by`
-fallback is audited above as `dedup_max_lsn`). Verified shape at
-local[4], 50k-event batch:
+Not a board query — the plan `LakeTable._dedup` builds for CdcEngine
+(WAL contract: lsn unique per key) when the exact pass-1 key count fits
+a broadcast (the struct-`max_by` fallback is audited above as
+`dedup_max_lsn`). Pass 1 is an eager localCheckpoint, released after
+the write. Verified shape at local[4], 50k-event batch:
 
 ```
 BroadcastHashJoin LeftSemi BuildRight
